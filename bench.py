@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness — times the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+``$SPARK_GRAFT_CPUS`` defaults to the cores this process may run on
+(``session.default_parallelism``).
 
 Methodology (BASELINE.md §3-4, revised round 4): warm the session + JIT
 with one untimed run per query, then report THREE tiers per query:
@@ -62,6 +64,30 @@ BENCH_QUERIES = [
 ]
 
 _DIM_TABLES = ["region", "nation", "customer", "supplier"]
+
+# Session conf of every bench run (and of tools/ab.py, so an A/B is
+# measured under exactly the bench's settings).
+BENCH_CONF = {
+    # fixed initial shuffle width, independent of the core count
+    "spark.sql.shuffle.partitions": "8",
+    # one (non-empty) split per single-row-group file — small
+    # splits cannot parallelize a one-row-group scan, they only
+    # add empty tasks
+    "spark.sql.files.maxPartitionBytes": "256m",
+    # small-result benchmark: let AQE coalesce shuffle stages hard
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
+    # Arrow result fetch (symmetric with DuckDB's .df())
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # local-mode lever (A/B-measured round 4, ~10% on the
+    # shuffle-heavy headliners): local shuffles land in the page
+    # cache, so lz4 costs CPU and saves nothing. On a REAL
+    # cluster shuffle compression is usually a win (network/disk
+    # bound) — this is a bench-machine setting, not engine
+    # guidance.
+    "spark.shuffle.compress": "false",
+    "spark.shuffle.spill.compress": "false",
+}
 
 
 def _median_timed(fn, runs: int = 3) -> float:
@@ -165,12 +191,11 @@ def smoke() -> None:
     (regenerated fixtures, schema changes) in ~1 min without the full
     timed matrix. Exits non-zero on any failure."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from dask_xgboost_spark.registry import load_all
     from dask_xgboost_spark.session import get_spark
 
-    spark = get_spark(app_name="dxs-bench-smoke", master=f"local[{cpus}]")
+    spark = get_spark(app_name="dxs-bench-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
     for name in BENCH_QUERIES:
@@ -185,36 +210,12 @@ def smoke() -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from dask_xgboost_spark.registry import load_all
     from dask_xgboost_spark.session import get_spark
     from dask_xgboost_spark.sources import load
 
-    spark = get_spark(
-        app_name="dxs-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=8,
-        extra_conf={
-            # one (non-empty) split per single-row-group file — small
-            # splits cannot parallelize a one-row-group scan, they only
-            # add empty tasks
-            "spark.sql.files.maxPartitionBytes": "256m",
-            # small-result benchmark: let AQE coalesce shuffle stages hard
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            "spark.sql.autoBroadcastJoinThreshold": "64m",
-            # Arrow result fetch (symmetric with DuckDB's .df())
-            "spark.sql.execution.arrow.pyspark.enabled": "true",
-            # local-mode lever (A/B-measured round 4, ~10% on the
-            # shuffle-heavy headliners): local shuffles land in the page
-            # cache, so lz4 costs CPU and saves nothing. On a REAL
-            # cluster shuffle compression is usually a win (network/disk
-            # bound) — this is a bench-machine setting, not engine
-            # guidance.
-            "spark.shuffle.compress": "false",
-            "spark.shuffle.spill.compress": "false",
-        },
-    )
+    spark = get_spark(app_name="dxs-bench", extra_conf=BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
 
@@ -446,16 +447,9 @@ def main() -> None:
         # Per-query failures record a rows=-1 sentinel and keep every
         # measurement already taken; build/load failures leave both
         # tiers empty (build_scaled_dir cleans its own partial dir).
-        import importlib.util as _ilu
+        from tools.suite_scale import build_scaled_dir
 
-        _ss_spec = _ilu.spec_from_file_location(
-            "suite_scale",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "tools", "suite_scale.py"),
-        )
-        _ss = _ilu.module_from_spec(_ss_spec)
-        _ss_spec.loader.exec_module(_ss)
-        scaled10 = _ss.build_scaled_dir(spark, sf_dir, 10)
+        scaled10 = build_scaled_dir(spark, sf_dir, 10)
         for tier, names, sink in (
             ("hl", BENCH_QUERIES, shuffle_headline_10x),
             ("tpch", tpch_names, shuffle_tpch_10x),

@@ -758,9 +758,9 @@ def m_prep_09(spark, sf):
     pre-salt the rank (windows.py::salted_top_k's two-stage shape) or
     fall back to the map-only hashed split (M-PREP-07), whose fold
     sizes are binomial-approximate rather than exact. The salting
-    claim is MEASURED, not asserted (r14 A/B, tools/ab_mprep09.py,
-    BASELINE.md §5): an UNFILTERED full rank gets no WindowGroupLimit
-    pushdown (plan-verified — the protection that refuted Q-WIN-14's
+    claim is MEASURED, not asserted (r14 A/B, BASELINE.md §5): an
+    UNFILTERED full rank gets no WindowGroupLimit pushdown
+    (plan-verified — the protection that refuted Q-WIN-14's
     salting exists only for rank FILTERS), and on 10M-row fresh-JVM
     replicas pre-salting with 8 salts wins 6.3× (uniform 5-label) to
     7.9× (90%-hot-label) at identical shuffle rows, trading exactness

@@ -61,11 +61,11 @@ def q_tpch_02(spark, sf):
     (s_name, p_partkey) so the LIMIT is a deterministic top-k
     (TakeOrderedAndProject).
 
-    r15 (tools/ab_tpch02.py, guide §2.3/§5): the r14 form referenced
+    r15 (OPTIMIZATION_r15.md §12, guide §2.3/§5): the r14 form referenced
     the pruned offer list twice — once under the per-part MIN, once as
     the equality probe — and Catalyst's exchange reuse does not fire
     across the differently-pruned branches, so LINEITEM was scanned
-    TWICE per execution (plans/r15/q_tpch_02_before.txt nodes 1 and 24)
+    TWICE per execution (the r15 before-plan's nodes 1 and 24)
     with the whole dim-broadcast chain built twice. This form collapses
     both references onto ONE fact pass: aggregate the pruned offers to
     the (part, supplier) grain first — min offer price per pair, narrow
@@ -185,7 +185,7 @@ def q_tpch_03(spark, sf):
 def q_tpch_04(spark, sf):
     """Order-priority-checking shape (TPC-H Q4). The declared semantics
     stay the oracle's correlated EXISTS; the physical plan avoids it
-    (r14 A/B, tools/ab_tpch04.py — Catalyst's decorrelated semi join
+    (r14 A/B, OPTIMIZATION_r14.md Change 4 — Catalyst's decorrelated semi join
     builds a hash relation over the LINEITEM side, i.e. a fact-sized
     broadcast whose build cost grows linearly and dominated the wall:
     0.74 s at sf0.1 and 2.95 s at 10× vs 0.33/0.43 s for the shape
@@ -199,7 +199,7 @@ def q_tpch_04(spark, sf):
     lineitem rows drop from the inner join = EXISTS false; outputs
     proven identical at 1×/10×).
 
-    r15 (tools/ab_tpch04_r15.py): ONE body now — join the 6-month
+    r15 (OPTIMIZATION_r15.md §6): ONE body now — join the 6-month
     orders slice to lineitem, filter, COUNT(DISTINCT o_orderkey) per
     priority — and the footer gate toggles ONLY the broadcast hint
     (the r14 two-branch split, max-agg fallback vs gated count-
@@ -361,34 +361,6 @@ def _parquet_num_rows(path: str) -> int | None:
         return None
 
 
-def _order_map_fits_broadcast(spark, sf: str) -> bool:
-    """Footer-stats broadcast gate for Q8's order-grain map (the r10
-    audit's open note, BASELINE.md §5): the map is a join OUTPUT, so
-    Catalyst has no scan stats for it and its propagated estimate
-    overshoots — under the default 10 MB threshold the custkey-side
-    join planned as SMJ even when the true map size fit. The map is
-    row-bounded by orders (FK join to customer is row-preserving, the
-    projection is 3 narrow columns), and the orders row count is free
-    from the parquet footers — so hint broadcast() exactly when
-    rows × _Q8_MAP_ROW_BYTES fits the session's own
-    autoBroadcastJoinThreshold. The budget is an UPPER bound on the
-    true build size, so the hint can only ever fire where the user's
-    threshold genuinely admits the build; where the gate refuses,
-    Catalyst still broadcasts wherever its own estimates allow (the
-    hint is additive — refusal never regresses a plan). At 100 TB
-    (orders ~15B rows → ~1 TB estimate) the gate can never fire: the
-    estimate grows linearly with the footer row count, replacing
-    scan-stats luck with an explicit, conservative bound. Threshold
-    -1 (user disabled auto-broadcast) disables the hint too. The gate
-    binds at DataFrame-CONSTRUCTION time: lowering the threshold after
-    building the Q8 plan does not un-bake an already-granted hint
-    (queries here are constructed per run, so this is acceptable —
-    advisor note, r11)."""
-    return _footer_rows_fit_broadcast(
-        spark, f"{sf}/orders.parquet", _Q8_MAP_ROW_BYTES
-    )
-
-
 def _footer_rows_fit_broadcast(spark, table_path: str, row_bytes: int) -> bool:
     """Shared footer-stats broadcast bound (the Q8 gate's mechanism,
     r14: generalized so other join-OUTPUT builds — Q7's nation-pruned
@@ -407,7 +379,11 @@ def _footer_rows_fit_broadcast(spark, table_path: str, row_bytes: int) -> bool:
     cust_nation), 48 B covers 2-fixed-field rows (Q5's omap, Q13's
     counts).
     Refusal never regresses a plan: Catalyst still broadcasts wherever
-    its own estimates allow. Threshold -1 disables the hint."""
+    its own estimates allow. Threshold -1 disables the hint. The gate
+    binds at DataFrame-CONSTRUCTION time: lowering the threshold after
+    building a plan does not un-bake an already-granted hint (queries
+    here are constructed per run, so this is acceptable — advisor
+    note, r11)."""
     try:
         thr = _size_conf_bytes(
             spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -475,7 +451,7 @@ def q_tpch_08(spark, sf):
     falls back to a shuffle at scale (customer grows with SF).
 
     The order-grain map carries a broadcast hint GATED on footer
-    stats (_order_map_fits_broadcast, closing the r10 audit's 10 MB-
+    stats (_footer_rows_fit_broadcast, closing the r10 audit's 10 MB-
     threshold note): as a join output the map has no scan stats, so
     Catalyst's estimate overshoots and mid-scale users on the default
     threshold lost a broadcast whose true size fit. The gate bounds
@@ -596,11 +572,11 @@ def q_tpch_10(spark, sf):
     """Returned-item-reporting shape (TPC-H Q10): 4-way join on returns →
     per-customer lost revenue → top-20.
 
-    r15 (tools/ab_tpch10.py): the r1–r15 plan joined customer⋈orders
+    r15 (OPTIMIZATION_r15.md §13): the r1–r15 plan joined customer⋈orders
     first and aggregated AFTER the lineitem join, so under any admitting
     threshold the R-filtered LINEITEM itself became the broadcast build
     side — a fact-sized HashedRelation rebuilt every execution (the Q4
-    disease; plans/r15/q_tpch_10_before.txt node 11) — and above the
+    disease; the r15 before-plan's node 11) — and above the
     threshold the customer-wide intermediate (c_name strings) shuffled
     through the fact join and the aggregation. This plan pushes the
     revenue aggregate BELOW the customer join (the Q13 discipline):
@@ -756,7 +732,7 @@ def q_tpch_05(spark, sf):
     against both nation-keyed inputs — customers are pruned (and pick
     up n_name) and suppliers are semi-joined down before any fact join.
 
-    r15 (tools/ab_tpch05.py): the r5–r14 declared order made CUSTOMER
+    r15 (OPTIMIZATION_r15.md §2): the r5–r14 declared order made CUSTOMER
     the streaming side (cust_a ⋈ orders ⋈ lineitem ⋈ supp_a), so under
     any threshold that admits it Catalyst broadcast the FULL LINEITEM —
     a fact-sized HashedRelation rebuilt every execution (the Q4
@@ -846,7 +822,7 @@ def q_tpch_13(spark, sf):
     a join-condition filter rather than a WHERE so the zeros survive)
     re-aggregated into a histogram of counts.
 
-    r15 (tools/ab_tpch13.py): the r1–r14 plan joined customer to RAW
+    r15 (OPTIMIZATION_r15.md §3): the r1–r14 plan joined customer to RAW
     orders rows and counted after the join — under any threshold that
     admits it the LeftOuter build side is ORDERS, a fact-sized
     HashedRelation rebuilt every execution (the Q4 disease); above the

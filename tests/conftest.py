@@ -17,11 +17,9 @@ def spark():
 
     from dask_xgboost_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
+    # local[N] and N shuffle partitions, N = session.default_parallelism()
     s = get_spark(
         app_name="dxs-tests",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
         extra_conf={
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="dxs_wh_")
         },

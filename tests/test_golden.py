@@ -984,7 +984,7 @@ def test_events_stream_directory_source_streams_all_rows(spark, sf_dir, tmp_path
     the file source — which lists only plain files and never descends
     into subdirectories — silently produced an EMPTY stream: 0 rows,
     0 batches, no error (r13 measured footgun, caught by the
-    ab_stream_batch K=1 run returning groups=0). The fix links each
+    BASELINE.md §8 micro-batch A/B's K=1 run returning groups=0). The fix links each
     part file; this pins the directory-source row count end to end."""
     from dask_xgboost_spark.sources import load
     from dask_xgboost_spark.streaming.core import events_stream, run_to_memory

@@ -253,7 +253,7 @@ def test_tpch08_broadcast_gate_is_footer_stat_bounded(spark, sf_dir):
     missing table."""
     from dask_xgboost_spark.operators.composite import (
         _Q8_MAP_ROW_BYTES,
-        _order_map_fits_broadcast,
+        _footer_rows_fit_broadcast,
         _parquet_num_rows,
         _size_conf_bytes,
     )
@@ -264,10 +264,11 @@ def test_tpch08_broadcast_gate_is_footer_stat_bounded(spark, sf_dir):
     assert _size_conf_bytes("1g") == 1024**3
     assert _size_conf_bytes("-1") == -1
 
-    rows = _parquet_num_rows(f"{sf_dir}/orders.parquet")
+    orders = f"{sf_dir}/orders.parquet"
+    rows = _parquet_num_rows(orders)
     assert rows and rows > 0
     # (a) fires at fixture scale under the session threshold
-    assert _order_map_fits_broadcast(spark, sf_dir)
+    assert _footer_rows_fit_broadcast(spark, orders, _Q8_MAP_ROW_BYTES)
     # (b) the replica arithmetic: 1.5M orders (10×) → 96 MB bound,
     # already above the bench's 64 MB config (Catalyst's own estimate
     # still broadcasts there, so the hint is unneeded); 15M (100×) →
@@ -284,12 +285,14 @@ def test_tpch08_broadcast_gate_is_footer_stat_bounded(spark, sf_dir):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert not _order_map_fits_broadcast(spark, sf_dir)
+        assert not _footer_rows_fit_broadcast(spark, orders, _Q8_MAP_ROW_BYTES)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # (d) unknown layout → no hint, never an exception
     assert _parquet_num_rows("/nonexistent/orders.parquet") is None
-    assert not _order_map_fits_broadcast(spark, "/nonexistent")
+    assert not _footer_rows_fit_broadcast(
+        spark, "/nonexistent/orders.parquet", _Q8_MAP_ROW_BYTES
+    )
     # and with the gate live, EVERY join in the fixture plan is a
     # broadcast join — "BroadcastHashJoin in p" alone would be vacuous
     # (nation is always hint-broadcast), so assert the absence of any
@@ -961,10 +964,10 @@ _BOUNDED_SORT_QUERIES = [
     # DOMAIN (brands × types × sizes — generator-fixed vocabularies,
     # invariant in fact volume); the distinct-pair volume the r14
     # screen worried about flows through the exchanges BELOW the
-    # coalesce point and stays parallel (tools/ab_tpch16.py: 1.56×/1.51×
+    # coalesce point and stays parallel (OPTIMIZATION_r15.md §16: 1.56×/1.51×
     # at 1×/10×, outputs identical)
     "Q-TPCH-16",
-    # r15 continuation batch (tools/bounded_sort_rescreen.py — the
+    # r15 continuation batch (OPTIMIZATION_r15.md §19 — the
     # mechanical re-screen with the segment-based eligibility condition;
     # every grain below is an enum/calendar/bucket domain bounded by
     # construction, verified SF-invariant where data-derived):
@@ -1126,7 +1129,7 @@ def test_tpch07_customer_side_broadcast_gated(spark, sf_dir):
 
 
 def test_tpch04_one_body_gate_toggles_hint_only(spark, sf_dir):
-    """r15 Q4 shape (tools/ab_tpch04_r15.py): ONE body — 6-month orders
+    """r15 Q4 shape (OPTIMIZATION_r15.md §6): ONE body — 6-month orders
     slice joined to the shipdate-bounded lineitem, COUNT(DISTINCT
     o_orderkey) per priority — where the footer gate toggles only the
     broadcast HINT (the r14 two-branch split is gone, and with it the
@@ -1186,7 +1189,7 @@ def _no_fact_broadcast_build(p: str, fact: str = "lineitem") -> None:
 
 
 def test_tpch02_single_fact_pass(spark, sf_dir):
-    """r15 Q2 rewrite (tools/ab_tpch02.py): the pruned offer list is
+    """r15 Q2 rewrite (OPTIMIZATION_r15.md §12): the pruned offer list is
     aggregated ONCE to the (part, supplier) min grain and persisted
     (the Q11/Q15 multi-reference discipline) — Catalyst's exchange
     reuse does not fire across the differently-pruned references, so
@@ -1207,11 +1210,11 @@ def test_tpch02_single_fact_pass(spark, sf_dir):
 
 
 def test_tpch10_aggregate_below_customer_join(spark, sf_dir):
-    """r15 Q10 rewrite (tools/ab_tpch10.py, guide §2.3): revenue
+    """r15 Q10 rewrite (OPTIMIZATION_r15.md §13, guide §2.3): revenue
     aggregates per o_custkey BELOW the customer join (the Q13
     discipline) — `rev_c` exists only in that form; the r14 fact-first
     plan instead broadcast the R-filtered LINEITEM as a build side
-    (plans/r15/q_tpch_10_before.txt node 11) and carried c_name through
+    (the r15 before-plan's node 11) and carried c_name through
     the fact join. Pinned with the gate both on and (monkeypatched)
     off: lineitem is never a broadcast build, outputs identical."""
     from dask_xgboost_spark.operators import composite as comp
@@ -1262,7 +1265,7 @@ def test_gate_refusal_pins_shuffled_merge_join(spark, sf_dir):
     OVERSHOOTS), Catalyst left free was measured (10x under the bench's
     64 MB threshold) flipping the build side onto LINEITEM — a
     fact-sized HashedRelation rebuilt every execution
-    (plans/r15/q_tpch_08_10x64m_before.txt: BroadcastExchange (3) over
+    (OPTIMIZATION_r15.md §11: BroadcastExchange (3) over
     the lineitem scan). On refusal the join must now carry a `merge`
     hint: re-plan Q5/Q8/Q-JOIN-02 with the gate monkeypatched to refuse
     while the session threshold stays at its default (the exact defect

@@ -61,6 +61,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from dask_xgboost_spark.registry import load_all
 from dask_xgboost_spark.session import get_spark
+from tools.suite_scale import build_scaled_dir
 
 FACTS = ("lineitem", "orders", "events")
 
@@ -152,15 +153,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
 
-    import importlib.util as _ilu
-
-    _ss_spec = _ilu.spec_from_file_location(
-        "suite_scale",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "suite_scale.py"),
-    )
-    _ss = _ilu.module_from_spec(_ss_spec)
-    _ss_spec.loader.exec_module(_ss)
-    scaled = _ss.build_scaled_dir(spark, sf_dir, 10)
+    scaled = build_scaled_dir(spark, sf_dir, 10)
 
     n_ok = n_fail = 0
     errors = []
