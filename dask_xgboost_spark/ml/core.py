@@ -6,9 +6,14 @@ Re-expresses the reference's entire ML surface on Spark MLlib:
   (reference core.py:268-321): blocking call, returns a fitted model.
   The reference's orchestration — partition triads, who_has locality
   pinning, Rabit tracker bootstrap, gang scheduling, rank-0 result
-  dedup (core.py:164-265, tracker.py) — is all subsumed by MLlib's
-  ``.fit()``: Spark handles placement, gang execution and tree-aggregated
-  gradient sync internally, and returns one model to the driver.
+  dedup (core.py:164-265, tracker.py) — is subsumed by MLlib's
+  ``.fit()``, which runs gang execution and tree-aggregated gradient
+  sync internally and returns one model to the driver. Placement is
+  the one part ``train`` does itself: where the reference gives each
+  worker one task over its local partitions (core.py:164-231) and
+  ``xgboost.spark`` repartitions its input to ``num_workers``, ``train``
+  narrows the fit input to the estimator's columns and spreads it over
+  ``defaultParallelism`` partitions, so no scan layout leaves cores idle.
 - ``predict(model, df)`` mirrors ``dask_xgboost.predict``
   (core.py:340-384): lazy, per-partition, model broadcast by Spark
   (replacing closure serialization of the Booster, core.py:367).
@@ -350,6 +355,20 @@ def train(
             est.setWeightCol(sample_weight_col)
     else:
         raise ValueError(f"unsupported objective: {objective}")
+    # Narrow to the columns the estimator reads, then spread the rows over
+    # every core: a scan's layout (one parquet row group → one non-empty
+    # partition) would otherwise run every histogram pass on one task.
+    # OneVsRest reads sample_weight_col even when the eval union's ``_w``
+    # is the weightCol. Not persisted: caching the narrow frame saves
+    # MLlib's second materialization of the exchange (logDataset's
+    # ``dataset.rdd``) but raised the perfbench gbt_fit peak_mem_mb on
+    # 4 cores from ~1,190 MB to 1,412-1,645 MB (MEMORY_AND_DISK) or
+    # ~1,389 MB (DISK_ONLY).
+    keep = [features_col, label_col, common.get("weightCol"),
+            sample_weight_col, common.get("validationIndicatorCol")]
+    fit_df = fit_df.select(*dict.fromkeys(c for c in keep if c)).repartition(
+        fit_df.sparkSession.sparkContext.defaultParallelism
+    )
     model = est.fit(fit_df)
     if impute_means is not None:
         # stamp the imputation contract on the model so predict()/

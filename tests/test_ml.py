@@ -129,6 +129,78 @@ def test_train_predict_functional_api(spark, emb):
     assert out.count() == emb.count()
 
 
+def test_one_partition_input_fits_on_every_core(spark, emb):
+    # reference core.py:164-231 gives every worker a task; here train()
+    # spreads even a single-partition input over defaultParallelism, so
+    # every per-level histogram stage runs one task per core
+    sc = spark.sparkContext
+    group = "test_ml_one_partition_fit"
+    sc.setJobGroup(group, group)
+    try:
+        train({"objective": "binary:logistic", **PARAMS}, emb.coalesce(1), label_col="y")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [
+        st.getStageInfo(s)
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    hist = {s.stageId: s.numTasks for s in stages if s and "RandomForest.scala" in s.name}
+    assert hist, "no histogram stages recorded for the fit"
+    assert set(hist.values()) == {sc.defaultParallelism}, hist
+
+
+def test_extra_columns_do_not_change_model(spark, emb):
+    # train() narrows its input before the repartition, so the columns a
+    # caller happens to carry cannot move rows between partitions.
+    # Subsampling seeds per partition, which makes the model sensitive to
+    # which rows land in which partition.
+    import numpy as np
+
+    params = {"objective": "binary:logistic", **PARAMS, "subsample": 0.5}
+    wide = train(params, emb, label_col="y")
+    narrow = train(params, emb.select("features", "y"), label_col="y")
+
+    def scored(model):
+        from pyspark.ml.functions import vector_to_array
+
+        return (
+            predict(model, emb)
+            .select("vec_id", "prediction", vector_to_array("probability").alias("p"))
+            .toPandas()
+            .sort_values("vec_id")
+            .reset_index(drop=True)
+        )
+
+    a, b = scored(wide), scored(narrow)
+    assert a["prediction"].equals(b["prediction"])
+    assert np.array_equal(np.stack(a["p"]), np.stack(b["p"]))
+
+
+def test_multiclass_sample_weight_survives_narrowing(spark, emb):
+    # the OneVsRest weight path (est.setWeightCol) reads a column that
+    # train() must keep when it narrows the fit input
+    import numpy as np
+
+    df = emb.withColumn("ym", F.col("label").cast("double")).withColumn(
+        "w", (1 + F.col("vec_id") % 2 * 10).cast("double")
+    )
+    base = XGBClassifier(n_estimators=3, max_depth=2).fit(df, label_col="ym")
+    weighted = XGBClassifier(n_estimators=3, max_depth=2).fit(
+        df, label_col="ym", sample_weight_col="w"
+    )
+    assert weighted.objective_ == "multi:softprob"
+
+    def proba(clf):
+        pdf = clf.predict_proba(df).select("vec_id", "proba").toPandas()
+        return np.stack(pdf.sort_values("vec_id")["proba"])
+
+    assert not np.array_equal(proba(base), proba(weighted)), (
+        "weights must affect the multiclass model"
+    )
+
+
 def test_bad_objective_raises(spark, emb):
     with pytest.raises(ValueError, match="unsupported objective"):
         train({"objective": "rank:pairwise"}, emb, label_col="y")
